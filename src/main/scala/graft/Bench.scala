@@ -1,46 +1,34 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-run benchmark: every SparkEntry query at SPARK_GRAFT_SF_DIR,
-  * one JSON line on stdout. Steady state is two passes per query — the
-  * cold pass pays per-query codegen/plan compilation, the warm pass is
-  * the cost a resident cluster actually sees; `value` (the gated
-  * metric) is the warm total, cold rides along for transparency.
+  * reported as two JSON lines on stdout. The schedule is fixed:
   *
-  * Round-5 lesson baked in here: the driver runs this under an external
-  * timeout, and a run that overstays is killed with NO output (r5:
-  * rc=124 → the whole round's bench was ungraded). Three guards:
-  *   - a wall-clock budget (SPARK_GRAFT_BENCH_BUDGET, default 475 s)
-  *     with a bounded-overshoot hard wall (SPARK_GRAFT_BENCH_HARDWALL,
-  *     default 500 s): once the budget is exceeded — or a 2-pass would
-  *     itself cross the hard wall — remaining queries run ONE pass that
-  *     stands in for both cold and warm, and are listed in
-  *     "single_pass";
-  *   - a failed query records -1 (excluded from totals, listed in
-  *     "failures") instead of masquerading as a fast success;
-  *   - the stall-retry third pass is *conditional*: only when the warm
-  *     pass measures slower than cold — the signature of this host's
-  *     episodic 10-30× neighbor-contention stalls — do we re-run and
-  *     take the min. Steady state stays 2 passes, not 3.
+  *   1. an untimed warm-up runs the first five entries, so JVM and JIT
+  *      start-up does not land on the first timed samples;
+  *   2. the memo is cleared and whatever the warm-up pinned is released;
+  *   3. each [[Substrates.all]] build runs once and is billed as its own
+  *      `substrate:*` entry, so its consumers measure pure query cost;
+  *   4. every entry runs in alphabetical order: a `singlePass` entry
+  *      ([[SparkEntry.Q]]) once, every other entry a cold pass and then
+  *      a warm pass. The cold pass pays plan compilation and codegen;
+  *      the warm pass is what a resident cluster sees. `value` (the
+  *      gated metric) is the warm total; cold rides along.
+  *
+  * A run killed by an external timeout leaves NO output, so once
+  * [[HardWallS]] has elapsed no further entry starts, and the skipped
+  * entries are listed in `skipped_wall`. A failed entry records -1, is
+  * excluded from the totals and is listed in `failures`.
+  * `SPARK_GRAFT_ONLY=q_a,q_b` restricts the suite to those names and
+  * skips the substrate pass; the selected entries then build the
+  * substrates they need inside their own timing.
   */
 object Bench {
-  private[graft] def scratchDir(): String = Scratch.dir("graft-local")
 
-  /** Declared-iterative entries (VERDICT r16 wrong #1): queries whose
-    * cost IS a genuine multi-round loop — driver-convergence graph
-    * peels, fixed-round EM/Newton solves, multi-micro-batch streaming
-    * state. Their seconds are the product under test, not noise to
-    * shed, and a single-pass sample misgrades exactly the entries
-    * where warm/cold separation matters most — so the budget
-    * projection never sacrifices them to single-pass mode (the hard
-    * wall still gates them like everything else; honesty about
-    * overruns beats coverage). DERIVED from the registry's
-    * `Q.iterative` flag — declared next to each query, so a rename or
-    * a new iterative entry can never silently desynchronize from this
-    * exemption (review r17).
-    */
-  private[graft] lazy val DeclaredIterative: Set[String] =
-    SparkEntry.registry.filter(_.iterative).map(_.name).toSet
+  /** No entry starts after this many elapsed seconds, so a run ends by
+    * the wall plus one entry. External timeouts have tolerated runs of
+    * up to 512 s. */
+  private val HardWallS = 500.0
 
   /** Git SHA of the tree this run measures (+ "-dirty" when the work
     * tree has uncommitted tracked changes), or "unknown". Stamped into
@@ -108,63 +96,18 @@ object Bench {
     // read inputs from a tmpfs copy: one slow disk pass instead of one
     // per scan when the host's IO-stall episodes hit (see Scratch)
     val sfDir = Scratch.localize(sfDirOrig)
-    // default 4, NOT the host's 32: every prior round's record (r1
-    // baseline, r4's 52 s, r5's 81 s) ran at this default, so the
-    // driver's cross-round comparison stays apples-to-apples — and
-    // under this host's scheduling-latency episodes a 32-thread pool
-    // with 32-way shuffles measured 3-5× SLOWER per query than 4 (tiny
-    // per-task data; wakeup latency dominates)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // 475, raised from 440 (r11): the driver's own runs measured
-    // elapsed_s 501 (r8) and 512 (r9) with rc=0, so its external
-    // timeout is comfortably past 512; r10's 440 still shed 26
-    // queries to single-pass against a <10 target. The raise is safe
-    // ONLY because the overshoot is now BOUNDED (ADVICE r10): the
-    // hard wall below refuses to START a 2-pass whose projected
-    // finish crosses SPARK_GRAFT_BENCH_HARDWALL (default 500), so the
-    // worst case is 500 + one single-pass misestimate ≈ the
-    // empirically tolerated 512 — no longer "budget + whatever the
-    // last 2-pass costs".
-    val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "475").toDouble
-    val hardWallS = sys.env.getOrElse("SPARK_GRAFT_BENCH_HARDWALL", "500").toDouble
-    // Pool CAPPED at 8 like the shuffle width below (r14, VERDICT r13
-    // #2): the driver runs SPARK_GRAFT_CPUS=32, and BENCH_r10 measured
-    // that pool's cost precisely — the sub-second majority ran ~1.8×
-    // the 4-cpu records (+~0.3 s/pass of task-wakeup latency on tiny
-    // per-task data) while the expensive tail gained ~nothing (~0.95×).
-    // Across ~400 passes that tax alone (~100 s) was what pushed the
-    // driver-default run into degraded sheds (BENCH_r13: 5
-    // single-pass). Every checked-in median ran at cpus ≤ 8, so the
-    // cap also brings driver runs back onto the recorded
-    // comparability surface. This is Bench-only policy — Verify and
-    // the library itself still use whatever the session gives them.
-    val pool = math.min(cpus.toInt, 8)
-    val spark = SparkSession.builder()
-      .master(s"local[$pool]")
-      // shuffle partitions CAPPED at 8 even when the pool is wider
-      // (r11): the driver runs cpus=32, and BENCH_r10 measured its
-      // per-query cost ~1.8× the 4-cpu records on the sub-second
-      // majority — 32-way shuffles of kilobyte partitions buy nothing
-      // but task-wakeup latency. The pool stays at `cpus` (wide scans
-      // still fan out); only the default shuffle width is bounded —
-      // exactly the "size shuffle partitions to the data, not the
-      // host" rule the scaladocs apply at 100 TB, in the other
-      // direction. cpus ≤ 8 (all recorded configs) is unchanged.
-      .config("spark.sql.shuffle.partitions", math.min(cpus.toInt, 8))
-      // pinned like Verify/TestSpark: the events adapter casts NTZ
-      // wall-clock through the session zone — a non-UTC host default
-      // would shift ts/ts_ns and break oracle parity (ADVICE r7)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", scratchDir())
-      .config("spark.sql.warehouse.dir", Scratch.dir("graft-wh"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // Pool capped at 8: at SPARK_GRAFT_CPUS=32 and sf0.1, a 32-wide pool
+    // with 32-way shuffles of kilobyte partitions ran the sub-second
+    // majority ~1.8× slower (task-wakeup latency) while the expensive
+    // tail gained nothing. Both the requested
+    // `cpus` and the `pool` actually used are published.
+    val cpus = GraftSession.cpus
+    val pool = math.min(cpus, 8)
+    val spark = GraftSession(pool)
     val t0Suite = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - t0Suite) / 1e9
 
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def once(name: String, fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
       catch { case e: Throwable =>
@@ -173,537 +116,111 @@ object Bench {
       }
     }
 
-    var failures = List.empty[String]
-    var singlePass = List.empty[String]
-    var skippedWall = List.empty[String]
-    // SPARK_GRAFT_ONLY=q_a,q_b restricts the suite — debugging aid
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // Budget-priority order (r8 lesson: the driver run budget-tripped 94
-    // queries, and the ones left single-pass included the NEWEST — the
-    // very queries with no clean local median evidence). Queries ABSENT
-    // from the checked-in median record run first (thinnest evidence),
-    // then ascending recorded cost, so warm two-pass coverage is
-    // maximized before the budget trips and degradation lands on the few
-    // expensive, already-well-characterized tails.
-    val medians: Map[String, Double] = {
-      val path = sys.env.getOrElse("SPARK_GRAFT_MEDIANS", "tools/bench_medians.json")
-      val f = Seq(new java.io.File(path),
-          new java.io.File(sys.props.getOrElse("graft.repo.dir",
-            sys.props.getOrElse("user.dir", ".")), path))
-        .find(_.exists())
-      if (f.isEmpty)
-        System.err.println(s"[bench] medians file '$path' not found — " +
-          "budget-priority order degrades to alphabetical")
-      f.fold(Map.empty[String, Double]) { file =>
-        val src = scala.io.Source.fromFile(file)
-        try """"([^"]+)"\s*:\s*([0-9.eE+-]+)""".r.findAllMatchIn(src.mkString)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        finally src.close()
-      }
-    }
-    // COLD medians (r16): the cold-sample stall flag needs a cold
-    // reference — queries with a real one-time plan/codegen cost run a
-    // stable 20x+ cold/warm ratio (q_mahalanobis: 3.4 s cold, 0.14 s
-    // warm), and judging their colds against WARM medians would flag
-    // them as host-stall ghosts every run. Missing file or entry →
-    // fall back to the warm-median criterion.
-    val coldMedians: Map[String, Double] = {
-      val path = sys.env.getOrElse("SPARK_GRAFT_MEDIANS_COLD",
-        "tools/bench_medians_cold.json")
-      val f = Seq(new java.io.File(path),
-          new java.io.File(sys.props.getOrElse("graft.repo.dir",
-            sys.props.getOrElse("user.dir", ".")), path))
-        .find(_.exists())
-      f.fold(Map.empty[String, Double]) { file =>
-        val src = scala.io.Source.fromFile(file)
-        try """"([^"]+)"\s*:\s*([0-9.eE+-]+)""".r.findAllMatchIn(src.mkString)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        finally src.close()
-      }
-    }
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .sortBy { case (n, _) =>
-        (medians.contains(n), medians.getOrElse(n, 0.0), n) }
-    // Untimed JIT/codegen warmup: the first queries of a fresh JVM absorb
-    // interpreter/C2 warmup into their samples, and the budget-priority
-    // order (cheapest first) would land that tax squarely on the
-    // sub-second queries cross-round comparisons are most sensitive to
-    // (measured: the same cheap query 1.5-2x slower when run suite-early
-    // vs in a warmed JVM). Five cheapest known queries, one pass each.
-    // Snapshot/release around the warmup too (ADVICE r9): a warmup query
-    // that pins blocks (localCheckpoint/persist) would otherwise keep
-    // them cached for the whole suite, turning its own later "cold"
-    // sample warm. Failures are logged, not silently swallowed.
-    locally {
-      val beforeWarm = spark.sparkContext.getPersistentRDDs.keySet
-      selected.sortBy { case (n, _) => medians.getOrElse(n, Double.MaxValue) }
-        .take(5).foreach { case (n, fn) =>
-          try fn(spark, sfDir).count()
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] warmup $n failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          }
-        }
-      val prot = ops.DfMemo.protectedRddIds
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => beforeWarm(id) || prot(id) }
-        .values.foreach(_.unpersist(blocking = false))
-      // drop any DfMemo substrate a warmup query happened to build
-      // (ADVICE r12): the pin-exempt sweep above would otherwise carry
-      // it into the measured loop with NOBODY billed for the build —
-      // the explicit substrate pass below is the only billing point
-      ops.DfMemo.clear()
-    }
-    // EXPLICIT substrate billing (VERDICT r12 #1): materialize each
-    // run-scoped DfMemo substrate OUTSIDE any query's timed window and
-    // report the build as its own `substrate:*` line. Under
-    // first-consumer-pays, BENCH_r12 priced the 1.2 s q_hard_negatives
-    // at 9.4 s because it drew the shared cell-kernel build; now every
-    // consumer measures pure query cost and the kernel cost is a
-    // visible, attributed line of its own (one pass — a substrate
-    // build is definitionally cold; consumers measure the warm reuse).
-    // SPARK_GRAFT_ONLY debug runs skip the substrate pass entirely —
-    // paying all five builds (~40 s at sf0.1) to debug one query
-    // multiplies every iteration's latency for nothing; the selected
-    // queries then build what they need first-consumer-pays, which is
-    // fine for debugging (review r13)
-    var substrateStallSuspect = List.empty[String]
-    val substrateResults =
-      if (only.nonEmpty) Nil
-      else Substrates.all.map { case (name, fn) =>
-        val t = once(name, fn)
-        // a substrate build is one cold pass with no in-JVM retry
-        // possible (a second run would hit the freshly-built memo and
-        // measure nothing), so a stall during the build cannot be
-        // re-sampled here — flag it against the recorded median
-        // (3× floor 2 s, the stall-retry signature) so single-run
-        // consumers know, and let the cross-pass median merge absorb it
-        // (review r13)
-        for (m <- medians.get(name) if t > math.max(2.0, 3 * m)) {
-          substrateStallSuspect ::= name
-          System.err.println(f"[bench] $name build $t%.2f s is 3x its " +
-            f"median $m%.2f — host stall suspected, flagged")
-        }
-        System.err.println(f"[bench] $name built in $t%.2f s t=$elapsedS%.0f")
-        if (t.isNaN) failures ::= name
-        (name, t, t)
-      }
-    val substrateNames = substrateResults.map(_._1)
-    // PREDICTIVE budget (r9 task #5: n_single_pass 23 → <10). The old
-    // policy 2-passed greedily until the wall and then single-passed
-    // EVERYTHING after — so host stalls late in the run cascaded into
-    // the whole expensive tail. Now: before each query, project the
-    // cost of finishing the suite (2-pass ≈ 2.4× median, single ≈
-    // 1.4×, unknown queries 1 s); while the projection overruns 92% of
-    // budget, SACRIFICE the most expensive not-yet-run query that HAS
-    // a median record (solid prior evidence → least information lost)
-    // to single-pass mode. Stall-free runs project ~290 s and
-    // sacrifice nothing; a stalled run sheds exactly as many
-    // well-characterized tails as the stall consumed. The second warm
-    // sample is gone — it alone cost ~1/3 of the budget; the
-    // conditional stall-retry (warm slower than cold = stall
-    // signature) still covers the 13×-jitter case r7 hit.
-    val sacrificed = scala.collection.mutable.Set.empty[String]
-    // COMMITTED demotion list (r18, VERDICT r17 next #2): the driver
-    // benches the SAME tree at two core counts, and the adaptive
-    // budget machinery demoted 54 entries to single-pass at 32 cpus vs
-    // 9 at 8 cpus (BENCH_r17) — so nearly every scaling ratio compared
-    // a cold sample against a warm one and the PERF scaling block was
-    // uninterpretable. tools/bench_demote.json pins the expensive,
-    // well-characterized tail to single-pass mode at EVERY core count
-    // (same set both runs ⇒ like-for-like ratios); it is sized so the
-    // remaining 2-pass projection fits the budget even under the
-    // measured 32-cpu additive tax, so the adaptive path rarely needs
-    // to shed anything extra. Iterative entries are never demoted
-    // (their warm/cold split is the product under test — r16 #1), and
-    // SPARK_GRAFT_ONLY debug runs skip the list entirely.
-    val committedDemote: Set[String] = {
-      val path = sys.env.getOrElse("SPARK_GRAFT_DEMOTE", "tools/bench_demote.json")
-      val f = Seq(new java.io.File(path),
-          new java.io.File(sys.props.getOrElse("graft.repo.dir",
-            sys.props.getOrElse("user.dir", ".")), path))
-        .find(_.exists())
-      if (only.nonEmpty) Set.empty
-      else f.fold(Set.empty[String]) { file =>
-        val src = scala.io.Source.fromFile(file)
-        try """"([^"]+)"""".r.findAllMatchIn(src.mkString)
-          .map(_.group(1)).toSet -- DeclaredIterative
-        finally src.close()
-      }
-    }
-    sacrificed ++= committedDemote
-    // coefficients RE-calibrated (r11) against the three clean r10
-    // medians runs: elapsed 344-370 s for 176 queries 2-passed with
-    // Σwarm-median 139.5 — actual ≈ 2.25× + overhead, so 2.45 carries
-    // ~10% headroom. (The r10 value 2.9 was fit to a DRIVER run —
-    // 32-cpu wakeup-latency inflation baked into the base model made
-    // every projection start ~60 s over and budget-shed from query
-    // one; host slowness is the adaptive ratio's job now, not the
-    // base model's.)
-    def twoPassCost(n: String) = medians.get(n).map(_ * 2.45 + 0.1).getOrElse(1.2)
-    def onePassCost(n: String) = medians.get(n).map(_ * 1.35 + 0.05).getOrElse(0.7)
-    // ADAPTIVE calibration (r10 → r11: n_single_pass 26 vs <10 — the
-    // static coefficients were calibrated at cpus=4 while the driver
-    // runs cpus=32, and its overrun compounded into 26 sacrifices).
-    // The correction is ADDITIVE per pass, not a multiplicative
-    // ratio, because that is the measured shape of driver slowness:
-    // BENCH_r10's cheap sub-second majority ran ~1.8× the 4-cpu
-    // medians (+~0.3 s/pass of task-wakeup overhead) while its
-    // expensive tail ran ~0.95× — a constant per-pass tax, which a
-    // ratio fitted on the cheapest-first head would wrongly
-    // extrapolate onto the tail's seconds (the mass-sacrifice
-    // cascade). Track mean (actual − predicted) per pass over
-    // completed queries and charge it to every remaining pass;
-    // clamped to [−0.05, +0.6] so one stalled query can't triple the
-    // projection — the hard wall bounds any true worst case.
-    // Only median-backed queries feed the calibration: the no-median
-    // head (the round's newest queries) predicts a flat 1.2 s guess,
-    // and error against a guess is not host signal — r11's first cut
-    // let those first five queries set errPerPass=0.57 and shed 26
-    // tails before a single calibrated sample existed.
-    var predSpent = 0.0
-    var actSpent = 0.0
-    var passesRun = 0
-    // consecutive stall-flagged calibration samples (ADVICE r15): the
-    // charge-at-prediction suppression below is correct for EPISODIC
-    // stalls, but under a SUSTAINED 3x-plus host slowdown it would
-    // flag every median-backed query, freeze errPerPass near 0, never
-    // shed, and overshoot to the hard wall dropping the expensive
-    // tail as skipped_wall. Three consecutive flags = sustained; from
-    // then on charge the CLAMPED actual (3x prediction) so the real
-    // slowdown feeds the error model while one extreme sample still
-    // cannot triple the projection. Any clean sample resets the run.
-    var stallStreak = 0
-    // negative clamp widened -0.05 → -0.12 (r17, VERDICT r16 wrong
-    // #1): the r16 DRIVER run finished 31 s under its projection with
-    // the clamp pinned at -0.05 — the measured mean error was
-    // ≈ -0.07 s/pass, so the old floor withheld real host-speed
-    // signal and the projection kept shedding entries the budget
-    // afforded (q_kcore_converged went single-pass). The positive
-    // clamp is the stall guard and stays at 0.6; the downside risk of
-    // a too-negative floor is bounded by the wallTripped gate on
-    // every 2-pass start.
-    def errPerPass = if (passesRun < 12) 0.0
-      else math.min(0.6, math.max(-0.12, (actSpent - predSpent) / passesRun))
-    // insertion-ordered and UPDATABLE: the end-of-run rescue pass below
-    // upgrades single-pass entries in place once leftover budget is known
-    val resultsBuf =
-      scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    selected.zipWithIndex.foreach { case ((name, fn), idx) =>
-      // The hard wall gates ALL starts, not just 2-passes (r11: a host
-      // slowness episode pushed a local run to elapsed 516 s because
-      // post-budget SINGLE passes kept starting past the wall — past
-      // the empirically tolerated 512, i.e. the regime where the
-      // driver's external kill would lose the entire artifact). Once
-      // the wall is crossed, remaining queries are SKIPPED and
-      // reported honestly in skipped_wall; by the ascending-cost
-      // priority order the skipped tail is exactly the expensive,
-      // median-characterized queries, and the worst-case total stays
-      // hardWall + ONE pass overshoot. Clean runs (elapsed 360-400 s)
-      // never get near this.
-      if (elapsedS > hardWallS) { skippedWall ::= name }
-      else runOne(name, fn, idx)
-    }
-    def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame, idx: Int): Unit = {
-      // snapshot so we release only blocks THIS query pinned — a blanket
-      // unpersist would silently invalidate any future cross-query cache
+    // Release what `body` pinned, so one entry's pins never turn a later
+    // entry's cold sample warm — EXCEPT DfMemo's protected pins: the memo
+    // frames' checkpoint lineage (the only copy; unpersisting it kills
+    // every later consumer with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) and
+    // their cache buffers.
+    def releasing[A](body: => A): A = {
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      val remaining = selected.drop(idx).map(_._1)
-      def projected = elapsedS + remaining.map(n =>
-        if (sacrificed(n)) onePassCost(n) + errPerPass
-        else twoPassCost(n) + 2 * errPerPass).sum
-      var candidates = remaining.filter(n => !sacrificed(n) &&
-          medians.contains(n) && !DeclaredIterative(n))
-        .sortBy(n => -medians(n))
-      while (projected > budgetS * 0.92 && candidates.nonEmpty) {
-        sacrificed += candidates.head
-        System.err.println(s"[bench] sacrificing ${candidates.head} to single-pass " +
-          f"(projected overrun at t=$elapsedS%.0f, errPerPass=$errPerPass%.2f)")
-        candidates = candidates.tail
-      }
-      // Sacrifices are provisional until the query actually runs: if
-      // the projection RECOVERS (early-run noise calibrated away, or
-      // the host sped back up), restore not-yet-run sacrifices
-      // cheapest-first — maximum warm coverage regained per projected
-      // second. The 0.85/0.92 hysteresis band keeps one projection
-      // wobble from ping-ponging a query between modes.
-      // committed demotions are never restored — the fixed set at every
-      // core count is the whole point (scaling-ratio symmetry)
-      var restorable = remaining.filter(n =>
-          sacrificed(n) && n != name && !committedDemote(n))
-        .sortBy(n => medians.getOrElse(n, 0.0))
-      while (projected < budgetS * 0.85 && restorable.nonEmpty) {
-        sacrificed -= restorable.head
-        System.err.println(s"[bench] restoring ${restorable.head} to two-pass " +
-          f"(projection recovered at t=$elapsedS%.0f, errPerPass=$errPerPass%.2f)")
-        restorable = restorable.tail
-      }
-      // BOUNDED overshoot (ADVICE r10): never START a 2-pass whose own
-      // projected finish crosses the hard wall — the worst-case total
-      // is then hardWall + one single-pass misestimate, not
-      // budget + an unbounded final 2-pass.
-      val wallTripped =
-        elapsedS + twoPassCost(name) + 2 * errPerPass > hardWallS
-      val tq0 = System.nanoTime()
-      val (cold, warm) =
-        if (elapsedS > budgetS || sacrificed(name) || wallTripped) {
-          if (wallTripped && !sacrificed(name) && elapsedS <= budgetS)
-            System.err.println(f"[bench] $name single-pass: 2-pass would cross " +
-              f"hard wall $hardWallS%.0f at t=$elapsedS%.0f")
-          singlePass ::= name; val c = once(name, fn); (c, c)
-        } else {
-          val c = once(name, fn)
-          if (c.isNaN) (c, c)
-          else {
-            val w1 = once(name, fn)
-            val w =
-              if (w1.isNaN) w1
-              else if (w1 > math.max(c, 2.0)) math.min(w1, once(name, fn))
-              else w1
-            (c, w)
-          }
-        }
-      if (cold.isNaN || warm.isNaN) failures ::= name
-      else {
-        // feed the calibration with this query's predicted-vs-actual
-        // under the mode it ACTUALLY ran (failures carry no signal;
-        // a stall-retry third pass rides in as extra error — it IS
-        // extra cost the projection should absorb)
-        if (medians.contains(name)) {
-          val single = singlePass.headOption.contains(name)
-          val pred = if (single) onePassCost(name) else twoPassCost(name)
-          val act = (System.nanoTime() - tq0) / 1e9
-          // STALL-AWARE projection (VERDICT r14 #1): a query blowing
-          // through 3× its predicted cost (floor 2 s — the
-          // stall_suspect criterion applied to the prediction) is this
-          // host's episodic-stall signature, not sustained host speed.
-          // Feeding the inflated sample into the adaptive error would
-          // cascade sacrifices across the whole remaining tail
-          // (BENCH_r14: 7 stalls → 26 single-pass entries); charging
-          // the stalled query at its PREDICTED cost keeps the error
-          // model projecting from committed medians — the elapsed
-          // clock still carries the real loss, so the budget math
-          // stays honest, but one slow minute no longer rewrites the
-          // per-pass cost of every query after it.
-          val stalled = act > math.max(2.0, 3 * pred)
-          stallStreak = if (stalled) stallStreak + 1 else 0
-          val sustained = stalled && stallStreak >= 3
-          if (stalled)
-            System.err.println(f"[bench] $name act=$act%.2f vs pred=" +
-              f"$pred%.2f — stall (streak $stallStreak); charged at " +
-              (if (sustained) "clamped actual" else "prediction"))
-          predSpent += pred
-          actSpent += (if (sustained) math.min(act, 3 * pred)
-                       else if (stalled) pred else act)
-          passesRun += (if (single) 1 else 2)
-        }
-      }
-      System.err.println(f"[bench] $name cold=$cold%.2f warm=$warm%.2f t=$elapsedS%.0f")
-      // release what this query pinned — EXCEPT DfMemo's protected
-      // pins: the memo frames' checkpoint lineage (the only copy —
-      // unpersisting it kills every later consumer with
-      // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) AND their cache buffers
-      // (Dataset.persist registers the buffer RDD here at first
-      // materialization; sweeping it silently defeats the sharing)
-      val prot = ops.DfMemo.protectedRddIds
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => before(id) || prot(id) }
-        .values.foreach(_.unpersist(blocking = false))
-      resultsBuf(name) = ((cold, warm))
-    }
-    // RESCUE pass (VERDICT r14 #1): when the projection over-shed —
-    // a mid-run stall inflated elapsed time and forced sacrifices the
-    // budget would in hindsight have afforded — leftover budget buys
-    // the coverage back instead of expiring unused. Two stages, both
-    // LARGEST-MEDIAN-MULTIPLE-first (VERDICT r15 #3: the most-inflated
-    // recordings are the most damaged measurements, so they get the
-    // leftover budget first; no-median entries queue last),
-    // both gated on the same budget/hard-wall math as the main loop:
-    //   1. single-pass entries get ONE more pass in the now-warm JVM —
-    //      a genuine warm sample (the recorded one was cold), so the
-    //      entry leaves the degraded set entirely;
-    //   2. stall-suspect warm samples (3× committed median) re-run
-    //      once and keep the min — a clean re-run clears the flag, so
-    //      the artifact stops reporting ghosts the medians disprove.
-    var rescued = List.empty[String]
-    locally {
-      val fnByName = selected.toMap
-      def mayRun(n: String) = {
-        val cost = onePassCost(n) + errPerPass
-        elapsedS + cost < budgetS * 0.95 && elapsedS + cost < hardWallS
-      }
-      def rerun(n: String): Double = {
-        val before = spark.sparkContext.getPersistentRDDs.keySet
-        val w = once(n, fnByName(n))
+      try body
+      finally {
         val prot = ops.DfMemo.protectedRddIds
         spark.sparkContext.getPersistentRDDs
           .filterNot { case (id, _) => before(id) || prot(id) }
           .values.foreach(_.unpersist(blocking = false))
-        w
-      }
-      // priority: largest median-multiple first (VERDICT r15 #3) —
-      // the most-inflated recordings are the most damaged
-      // measurements, so leftover budget repairs them before the
-      // merely-degraded; no-median entries (inflation unknowable)
-      // queue last, cheapest recorded sample first.
-      def inflation(n: String): Double = (for {
-        m <- medians.get(n); r <- resultsBuf.get(n) if !r._2.isNaN
-      } yield r._2 / m).getOrElse(0.0)
-      val upgradable = singlePass
-        // committed demotions stay single-pass even when budget is left
-        // over — a rescue at one core count but not the other would
-        // reintroduce exactly the mode asymmetry the list removes
-        .filter(n => !committedDemote(n) &&
-          resultsBuf.get(n).exists(r => !r._2.isNaN))
-        .sortBy(n => (-inflation(n), resultsBuf(n)._2))
-      for (n <- upgradable if mayRun(n)) {
-        val w = rerun(n)
-        if (!w.isNaN) {
-          val (c, old) = resultsBuf(n)
-          resultsBuf(n) = ((c, math.min(w, old)))
-          // the flag clears ONLY when the extra pass genuinely
-          // improved on the recorded cold sample (ADVICE r15): a
-          // rescue pass slower than cold — host still slow — is
-          // effectively another cold sample, and clearing on it
-          // would launder a cold measurement into the warm total
-          if (w <= old) {
-            singlePass = singlePass.filterNot(_ == n)
-            rescued ::= n
-            System.err.println(f"[bench] rescued $n to warm=$w%.2f t=$elapsedS%.0f")
-          } else
-            System.err.println(f"[bench] rescue pass for $n measured " +
-              f"$w%.2f > recorded $old%.2f — still degraded, flag kept")
-        }
-      }
-      val suspects = resultsBuf.toList.collect {
-        // stage-1 rescues are excluded: a just-rescued entry can still
-        // read 3× its median when the host is still slow, and re-adding
-        // it here would push its name onto `rescued` twice (review r15)
-        case (n, (_, w)) if !singlePass.contains(n) && !rescued.contains(n) &&
-          medians.get(n).exists(m => w > math.max(2.0, 3 * m)) => n
-      }.sortBy(n => -(resultsBuf(n)._2 / medians(n)))
-      for (n <- suspects if mayRun(n)) {
-        val w = rerun(n)
-        if (!w.isNaN) {
-          val (c, old) = resultsBuf(n)
-          resultsBuf(n) = ((c, math.min(w, old)))
-          rescued ::= n
-          System.err.println(
-            f"[bench] re-sampled stall suspect $n warm=$w%.2f t=$elapsedS%.0f")
-        }
       }
     }
-    val results = substrateResults.toList ++
-      resultsBuf.toList.map { case (n, (c, w)) => (n, c, w) }
+
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val selected = SparkEntry.registry.sortBy(_.name)
+      .filter(q => only.forall(_.contains(q.name)))
+
+    releasing(selected.take(5).foreach(q => once(q.name, q.fn)))
+    // a substrate a warm-up entry built would otherwise be carried into
+    // the timed loop with nobody billed for it
+    ops.DfMemo.clear()
+
+    val substrates =
+      if (only.nonEmpty) Nil
+      else Substrates.all.map { case (name, fn) =>
+        val t = once(name, fn)
+        System.err.println(f"[bench] $name built in $t%.2f s t=$elapsedS%.0f")
+        (name, t, t)
+      }
+    val measured = selected.map { q =>
+      if (elapsedS > HardWallS) q.name -> None
+      else {
+        val (cold, warm) = releasing {
+          val c = once(q.name, q.fn)
+          if (q.singlePass || c.isNaN) (c, c) else (c, once(q.name, q.fn))
+        }
+        System.err.println(f"[bench] ${q.name} cold=$cold%.2f warm=$warm%.2f t=$elapsedS%.0f")
+        q.name -> Some((cold, warm))
+      }
+    }
+    val skippedWall = measured.collect { case (n, None) => n }
+    val results = substrates ++ measured.collect { case (n, Some((c, w))) => (n, c, w) }
+    val singlePass = selected.filter(_.singlePass).map(_.name).diff(skippedWall)
+    val failures = results.collect { case (n, c, w) if c.isNaN || w.isNaN => n }
+
     // JSON has no NaN: failed samples serialize as -1 and are excluded
-    // from the gated totals.
+    // from the totals.
     def j(v: Double): String = if (v.isNaN) "-1" else v.toString
     def obj(f: ((String, Double, Double)) => (String, Double)) =
       results.map(r => { val (k, v) = f(r); "\"" + k + "\":" + j(v) })
         .mkString("{", ",", "}")
+    def arr(xs: Seq[String]) = xs.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val ok = results.filterNot(r => r._2.isNaN || r._3.isNaN)
-    // Budget-tripped queries ran one cold pass recorded under "warm" —
-    // keep them OUT of the gated warm total (a cold pass billed as warm
-    // biases the gate against the engine exactly when the host stalls)
-    // and report them as single_pass_total alongside.
+    // A single-pass entry's one sample is cold: it stays OUT of the
+    // warm total and is reported as single_pass_total.
     val singleSet = singlePass.toSet
-    val (degraded, warmed) = ok.partition(r => singleSet(r._1))
+    val (singles, warmed) = ok.partition(r => singleSet(r._1))
     val warmTotal = warmed.map(_._3).sum
-    val singleTotal = degraded.map(_._3).sum
-    // ADVICE r7: "value" covers n_warm_measured queries, NOT n_queries —
-    // publish the denominator explicitly, and flag any run whose warm
-    // set shrank (budget-tripped queries) as degraded so cross-run
-    // comparisons never silently mix different query sets. Substrate
-    // build lines stay INSIDE the warm total (one build per suite is
-    // the honest amortized accounting) but OUT of n_warm_measured —
-    // they are cold builds, not warm-measured queries (review r13).
-    val subSet = substrateNames.toSet
-    val nWarm = warmed.count(r => !subSet(r._1))
-    // queries-only warm total, published ALONGSIDE the r13-defined
-    // "value" (which includes the cold substrate builds — the honest
-    // amortized accounting): pre-r13 totals priced substrate builds
-    // inside whichever query drew them, so round-over-round "value"
-    // comparisons mix definitions (ADVICE r13) — warm_total_queries is
+    val singleTotal = singles.map(_._3).sum
+    // Substrate builds stay INSIDE `value` (one build per suite is the
+    // amortized cost) but OUT of n_warm_measured and warm_total_queries,
     // the like-for-like per-query series.
+    val subSet = substrates.map(_._1).toSet
+    val nWarm = warmed.count(r => !subSet(r._1))
     val warmTotalQueries = warmed.filterNot(r => subSet(r._1)).map(_._3).sum
-    // Stall-suspect flag for QUERY samples (VERDICT r13 #8 — the
-    // mechanism substrates already have): a recorded sample 3× its
-    // committed median (floor 2 s) is this host's stall signature, not
-    // a plan property — single-pass samples especially, which the
-    // conditional warm-retry never re-checks. Flag, don't censor: the
-    // number still counts, the reader just stops chasing ghosts.
-    val stallSuspect = ok.filterNot(r => subSet(r._1)).collect {
-      case (n, _, w) if medians.get(n).exists(m => w > math.max(2.0, 3 * m)) => n
-    }.toList
-    stallSuspect.foreach { n =>
-      System.err.println(f"[bench] $n sample is 3x its committed median — " +
-        "host stall suspected, flagged")
-    }
-    // COLD samples get the same 3x-median flag (VERDICT r15 #3:
-    // BENCH_r15 carried q_curation_v3's cold at 6.2x its median with
-    // n_stall_suspect 0 — the warm-only flag let a stalled cold pass
-    // ride unmarked). The reference is the committed COLD median when
-    // recorded: plan-compilation-heavy queries run a stable 20x+
-    // cold/warm ratio and would otherwise be flagged as ghosts every
-    // run. Separate array: a flagged cold with a clean warm does not
-    // degrade the gated total, the reader just knows the cold column
-    // is a stall artifact.
-    val stallSuspectCold = ok.filterNot(r => subSet(r._1)).collect {
-      case (n, c, _) if coldMedians.get(n).orElse(medians.get(n))
-        .exists(m => c > math.max(2.0, 3 * m)) => n
-    }.toList
-    stallSuspectCold.foreach { n =>
-      System.err.println(f"[bench] $n COLD sample is 3x its committed " +
-        "median — host stall suspected, flagged (warm total unaffected)")
-    }
-    // Per-entry pass mode (r18, VERDICT r17 next #2): the bench knows
-    // whether each recorded number is a warm 2-pass sample, a cold
-    // single-pass stand-in, or a substrate build — emit it so the
-    // driver (and any reader) can compare like-for-like only, instead
-    // of inferring mode from the degraded lists.
     val modes = results.map { case (n, _, _) =>
-      val m =
-        if (subSet(n)) "substrate"
-        else if (singleSet(n)) "single"
-        else "warm"
+      val m = if (subSet(n)) "substrate" else if (singleSet(n)) "single" else "warm"
       "\"" + n + "\":\"" + m + "\""
     }.mkString("{", ",", "}")
-    val isDegraded =
-      singlePass.nonEmpty || failures.nonEmpty || skippedWall.nonEmpty
-    def arr(xs: List[String]) = xs.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // declared single-pass entries are the design, not degradation
+    val isDegraded = failures.nonEmpty || skippedWall.nonEmpty
+    val nQueries = results.size + skippedWall.size
+    val coldTotal = ok.map(_._2).sum
     val sha = gitSha()
+    // rescued and the stall_suspect lists stay as empty keys for parsers
     println(s"""{"metric":"total","value":$warmTotal,"unit":"sec",""" +
-      s""""cold_total":${ok.map(_._2).sum},"warm_total_measured":$warmTotal,""" +
+      s""""cold_total":$coldTotal,"warm_total_measured":$warmTotal,""" +
       s""""warm_total_queries":$warmTotalQueries,""" +
       s""""n_warm_measured":$nWarm,"degraded":$isDegraded,""" +
-      s""""single_pass_total":$singleTotal,"n_queries":${results.size + skippedWall.size},""" +
+      s""""single_pass_total":$singleTotal,"n_queries":$nQueries,""" +
       s""""n_failed":${failures.size},"failures":${arr(failures)},""" +
       s""""single_pass":${arr(singlePass)},""" +
       s""""n_skipped_wall":${skippedWall.size},"skipped_wall":${arr(skippedWall)},""" +
-      s""""rescued":${arr(rescued)},""" +
-      s""""substrates":${arr(substrateNames.toList)},""" +
-      s""""substrate_total":${substrateResults.map(_._3).filterNot(_.isNaN).sum},""" +
-      s""""substrate_stall_suspect":${arr(substrateStallSuspect)},""" +
-      s""""stall_suspect":${arr(stallSuspect)},""" +
-      s""""stall_suspect_cold":${arr(stallSuspectCold)},""" +
-      s""""sha":"$sha","elapsed_s":$elapsedS,""" +
+      s""""rescued":[],"substrates":${arr(subSet.toSeq)},""" +
+      s""""substrate_total":${substrates.map(_._3).filterNot(_.isNaN).sum},""" +
+      s""""substrate_stall_suspect":[],"stall_suspect":[],"stall_suspect_cold":[],""" +
+      s""""sha":"$sha","elapsed_s":$elapsedS,"cpus":$cpus,"pool":$pool,""" +
       s""""queries":${obj(r => r._1 -> r._3)},"queries_cold":${obj(r => r._1 -> r._2)},""" +
-      s""""modes":$modes,""" +
-      s""""n_demoted_committed":${committedDemote.size},""" +
+      s""""modes":$modes,"n_demoted_committed":${selected.count(_.singlePass)},""" +
       s""""sf":"$sfDirOrig"}""")
-    // The driver keeps only the LAST ~2000 chars of output (r6: the big
-    // line's head — with "value" — was truncated away and the round had
-    // no parseable total). This short, self-contained, FINAL summary
-    // line always fits inside that tail window.
+    // A reader that keeps only the LAST ~2000 chars of output loses the
+    // head (with "value") of the line above. This short, self-contained
+    // FINAL summary line always fits inside that tail.
     println(s"""{"metric":"total","value":$warmTotal,"unit":"sec",""" +
-      s""""cold_total":${ok.map(_._2).sum},"single_pass_total":$singleTotal,""" +
+      s""""cold_total":$coldTotal,"single_pass_total":$singleTotal,""" +
       s""""warm_total_queries":$warmTotalQueries,""" +
-      s""""n_queries":${results.size + skippedWall.size},"n_warm_measured":$nWarm,""" +
+      s""""n_queries":$nQueries,"n_warm_measured":$nWarm,""" +
       s""""degraded":$isDegraded,"n_failed":${failures.size},""" +
-      s""""n_single_pass":${singlePass.size},"n_stall_suspect":${stallSuspect.size},""" +
-      s""""n_stall_suspect_cold":${stallSuspectCold.size},""" +
-      s""""n_rescued":${rescued.size},""" +
+      s""""n_single_pass":${singlePass.size},"n_stall_suspect":0,""" +
+      s""""n_stall_suspect_cold":0,"n_rescued":0,""" +
       s""""n_skipped_wall":${skippedWall.size},"elapsed_s":$elapsedS,""" +
+      s""""cpus":$cpus,"pool":$pool,""" +
       s""""sha":"$sha","summary_of":"preceding full line","sf":"$sfDirOrig"}""")
     System.out.flush()
     spark.stop()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic harness behind the cross-round bench forensics (VERDICT
   * r9 task #1): NOT part of the driver contract.
   *
@@ -21,17 +19,7 @@ object Lab {
   def main(args: Array[String]): Unit = {
     val mode = args(0)
     val sfDir = Scratch.localize(args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Bench.scratchDir())
-      .config("spark.sql.warehouse.dir", Scratch.dir("graft-wh"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.cpus)
     mode match {
       case "plan" =>
         val outDir = new java.io.File(args(2)); outDir.mkdirs()
@@ -73,52 +61,6 @@ object Lab {
             println(f"""{"q":"$name","i":$i,"sec":$s%.3f}""")
           }
           ops.DfMemo.clear()
-        }
-      case "textrank" =>
-        // q_textrank prove-or-revert evidence (VERDICT r17 #1/#3): the
-        // full query's executedPlan tail is post-localCheckpoint
-        // (pageRankKeyed pins its edge input at construction), so the
-        // r17 before/after dumps were the identical 5-line tail. This
-        // mode dumps the PRE-checkpoint undirected-edge frame for the
-        // r16 form (distinct → self-union → distinct: bigram subtree
-        // planned twice, two dedup Exchanges) and the current form
-        // (one explode + one distinct), then A/Bs the FULL pipeline
-        // alternating old/new in one JVM (band-robust).
-        //   Lab textrank <sfDir> <outDir> <reps>
-        import org.apache.spark.sql.functions._
-        val outDir = new java.io.File(args(2)); outDir.mkdirs()
-        val reps = args(3).toInt
-        val toks = QShared.docsTokens(spark, sfDir)
-        def oldEdges = {
-          val bigrams = toks
-            .select(explode(zip_with(
-              slice(col("toks"), lit(1), greatest(size(col("toks")) - 1, lit(0))),
-              slice(col("toks"), lit(2), greatest(size(col("toks")) - 1, lit(0))),
-              (a, b) => struct(a.as("a"), b.as("b")))).as("e"))
-            .select(col("e.a").as("a"), col("e.b").as("b"))
-            .filter(col("a") =!= col("b"))
-            .distinct()
-          bigrams
-            .unionByName(bigrams.select(col("b").as("a"), col("a").as("b")))
-            .distinct()
-        }
-        def dump(df: org.apache.spark.sql.DataFrame, f: String): Unit =
-          java.nio.file.Files.writeString(
-            new java.io.File(outDir, f).toPath,
-            df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode))
-        dump(oldEdges, "q_textrank_before.txt")
-        dump(ops.GraphOps.textRankEdges(toks, "toks"), "q_textrank_after.txt")
-        println(s"[lab] wrote $outDir/q_textrank_{before,after}.txt")
-        def full(edges: => org.apache.spark.sql.DataFrame) =
-          ops.GraphOps.pageRankKeyed(edges, "a", "b", 3, 0.85)
-            .select(col("id").as("word"), round(col("rank"), 12).as("rank"))
-            .orderBy("word")
-        (1 to reps).foreach { i =>
-          val t0 = System.nanoTime(); full(oldEdges).count()
-          val t1 = System.nanoTime(); full(ops.GraphOps.textRankEdges(toks, "toks")).count()
-          val t2 = System.nanoTime()
-          println(f"""{"q":"textrank_ab","i":$i,"old":${(t1 - t0) / 1e9}%.3f,"new":${(t2 - t1) / 1e9}%.3f}""")
         }
       case other => sys.error(s"unknown Lab mode $other")
     }

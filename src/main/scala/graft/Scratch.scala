@@ -6,8 +6,8 @@ import java.nio.file.{Files, Path, Paths}
   * dirs and the write-side of roundtrip queries (csv/avro/partitioned
   * sinks). One root per JVM, recursively deleted by a shutdown hook —
   * `File.deleteOnExit` alone leaks non-empty directories, and Bench
-  * executes each roundtrip query up to 3×/run (ADVICE r5: unbounded
-  * /tmp growth across repeated bench+verify runs).
+  * executes each roundtrip query up to 2×/run (without the hook, /tmp
+  * grows without bound across repeated bench+verify runs).
   *
   * Lives on /dev/shm when present: this box's /tmp is a shared virtio
   * disk whose throughput swings ~10× with neighbor load (measured

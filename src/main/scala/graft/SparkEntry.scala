@@ -20,20 +20,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkEntry {
 
   /** One named query: Spark plan + optional DuckDB-dialect oracle SQL.
-    * `iterative` marks entries whose cost IS a genuine multi-round
-    * loop (driver-convergence peels, fixed-round EM/Newton solves,
-    * multi-micro-batch streaming state) — declared HERE, next to the
-    * query, so a rename or a new iterative entry cannot silently
-    * desynchronize from the bench's sacrifice exemption (review r17);
-    * Bench derives its DeclaredIterative set from this flag.
+    * `singlePass` declares that [[Bench]] times the entry with one cold
+    * pass instead of a cold and a warm pass: it marks the expensive,
+    * well-characterized entries whose second pass would not fit the
+    * bench's wall. Declared HERE, next to the query, so the pass mode
+    * is the same at every core count and survives a rename.
     */
   final case class Q(
       name: String,
       fn: (SparkSession, String) => DataFrame,
       oracle: Option[String],
-      iterative: Boolean = false)
+      singlePass: Boolean = false)
 
-  /** The full registry, flags included — Bench reads `iterative`. */
+  /** The full registry, flags included — Bench reads `singlePass`. */
   lazy val registry: Seq[Q] = all
 
   private lazy val all: Seq[Q] =

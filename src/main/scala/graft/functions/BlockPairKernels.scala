@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -40,6 +41,35 @@ private[graft] object BlockPairKernels {
     (ids, us)
   }
 
+  private val blockT = ArrayType(StructType(Seq(
+    StructField("id", LongType), StructField("u", ArrayType(DoubleType)))))
+
+  /** Both kernels take two packed blocks (array<struct<id:long,
+    * u:array<double>>>, the type [[decode]] reads) plus fixed-type
+    * scalars. Checked at analysis time, so a wrong element type such as
+    * array<float> fails before any job runs instead of inside a task. */
+  private def checkBlockArgs(fn: String, v1: Expression, v2: Expression,
+      scalars: (Expression, DataType)*): TypeCheckResult = {
+    def okBlock(t: DataType) = t match {
+      case ArrayType(StructType(fs), _) if fs.length == 2 =>
+        fs(0).dataType == LongType &&
+          (fs(1).dataType match {
+            case ArrayType(DoubleType, _) => true; case _ => false
+          })
+      case _ => false
+    }
+    if (okBlock(v1.dataType) && okBlock(v2.dataType) &&
+        scalars.forall { case (e, t) => e.dataType == t })
+      TypeCheckResult.TypeCheckSuccess
+    else {
+      val want = Seq(blockT, blockT) ++ scalars.map(_._2)
+      val got = Seq(v1.dataType, v2.dataType) ++ scalars.map(_._1.dataType)
+      TypeCheckResult.TypeCheckFailure(
+        s"$fn expects (${want.map(_.simpleString).mkString(", ")}); " +
+          s"got (${got.map(_.simpleString).mkString(", ")})")
+    }
+  }
+
   private val pairSchema = StructType(Seq(
     StructField("id1", LongType, nullable = false),
     StructField("id2", LongType, nullable = false),
@@ -64,25 +94,9 @@ private[graft] object BlockPairKernels {
         newChildren: IndexedSeq[Expression]): Expression =
       copy(newChildren(0), newChildren(1), newChildren(2), newChildren(3))
     override def elementSchema: StructType = pairSchema
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-      val vecT = ArrayType(StructType(Seq(
-        StructField("id", LongType), StructField("u", ArrayType(DoubleType)))))
-      def okVec(t: DataType) = t match {
-        case ArrayType(StructType(fs), _) if fs.length == 2 =>
-          fs(0).dataType == LongType &&
-            (fs(1).dataType match {
-              case ArrayType(DoubleType, _) => true; case _ => false
-            })
-        case _ => false
-      }
-      if (okVec(v1.dataType) && okVec(v2.dataType) &&
-          same.dataType == BooleanType && minCos.dataType == DoubleType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"cos_block_pairs expects ($vecT, $vecT, boolean, double); got " +
-            s"(${v1.dataType}, ${v2.dataType}, ${same.dataType}, ${minCos.dataType})")
-    }
+    override def checkInputDataTypes(): TypeCheckResult =
+      checkBlockArgs("cos_block_pairs", v1, v2,
+        same -> BooleanType, minCos -> DoubleType)
 
     override def eval(input: InternalRow): IterableOnce[InternalRow] = {
       val a1 = v1.eval(input); val a2 = v2.eval(input)
@@ -142,6 +156,8 @@ private[graft] object BlockPairKernels {
         newChildren: IndexedSeq[Expression]): Expression =
       copy(newChildren(0), newChildren(1), newChildren(2))
     override def elementSchema: StructType = knnSchema
+    override def checkInputDataTypes(): TypeCheckResult =
+      checkBlockArgs("knn_block_topk", v1, v2, same -> BooleanType)
 
     override def eval(input: InternalRow): IterableOnce[InternalRow] = {
       val a1 = v1.eval(input); val a2 = v2.eval(input)

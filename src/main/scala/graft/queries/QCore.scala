@@ -211,7 +211,7 @@ private[graft] object QCore {
         |c2 AS (SELECT g.cluster, CAST(p.i AS INT) AS dim,
         |        round(avg(p.x), 6) + 0.0 AS c
         |       FROM asg2 g JOIN pts p ON p.vec_id = g.vec_id GROUP BY g.cluster, p.i)
-        |SELECT cluster, dim, c FROM c2 ORDER BY cluster, dim""".stripMargin), iterative = true),
+        |SELECT cluster, dim, c FROM c2 ORDER BY cluster, dim""".stripMargin)),
 
     // ---- M5: relational surface — hash agg, broadcast/semi/anti/multi joins,
     //      top-k, union, rollup, event-time windows (SURVEY §2.3, §2.4, §2.6, §2.7, §2.8)
@@ -315,7 +315,7 @@ private[graft] object QCore {
       Some("""SELECT o_orderkey, o_custkey AS custkey, c_mktsegment,
         |  round(o_totalprice, 2) AS o_totalprice
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin)),
+        |ORDER BY o_orderkey""".stripMargin), singlePass = true),
 
     Q("q_topk",  // global top-k: TakeOrderedAndProject, no full sort
       (s, dir) => Tables.table(s, dir, "orders")

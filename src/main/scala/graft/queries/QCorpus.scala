@@ -197,7 +197,7 @@ private[graft] object QCorpus {
             round(col("es_key"), 6).as("es_key"))
           .orderBy("doc_id")
       },
-      Some(WeightedSampleOracleSql), iterative = true),
+      Some(WeightedSampleOracleSql)),
 
     Q("q_normalize_unicode",  // Unicode normalization (UAX #15) ahead
       // of the dedup keys (VERDICT r14 missing #1): combining-vs-
@@ -522,7 +522,7 @@ private[graft] object QCorpus {
         |  CASE WHEN degree < 2 THEN 0.0
         |    ELSE round(2.0 * COALESCE(tri, 0) / (degree * (degree - 1)), 6)
         |  END AS lcc
-        |FROM deg LEFT JOIN pn ON pn.id = deg.id ORDER BY deg.id""".stripMargin)),
+        |FROM deg LEFT JOIN pn ON pn.id = deg.id ORDER BY deg.id""".stripMargin), singlePass = true),
 
     Q("q_kcore",  // fixed-iteration k-core peel (Seidman 1983 /
       // Batagelj & Zaveršnik 2003) at k=6 over the same memoized
@@ -556,7 +556,7 @@ private[graft] object QCorpus {
         |          (SELECT a AS id FROM ke1 UNION ALL SELECT b FROM ke1)
         |        GROUP BY 1)
         |SELECT id, CAST(degree AS BIGINT) AS degree FROM kd1
-        |WHERE degree >= 6 ORDER BY id""".stripMargin)),
+        |WHERE degree >= 6 ORDER BY id""".stripMargin), singlePass = true),
 
     Q("q_countmin_topk",  // count-min sketch heavy hitters (Cormode &
       // Muthukrishnan 2005): the bounded-state frequency summary —
@@ -632,7 +632,7 @@ private[graft] object QCorpus {
             (col("est") - col("exact_cnt")).as("err"))
           .orderBy(col("exact_cnt").desc, col("w"))
       },
-      Some(CmTopkOracleSql), iterative = true),
+      Some(CmTopkOracleSql)),
 
     Q("q_kcore_converged",  // the PRODUCTION fixpoint k-core, gated
       // (VERDICT r15 #6: kcorePeelConverged was spec-swept but the
@@ -662,7 +662,7 @@ private[graft] object QCorpus {
           .select(col("id"), col("degree").cast("long").as("degree"))
           .orderBy("id")
       },
-      Some(kcoreConvergedOracleSql(k = 68, rounds = 7)), iterative = true),
+      Some(kcoreConvergedOracleSql(k = 68, rounds = 7))),
 
     Q("q_nb_auc",  // threshold-free grade of the TRAINED NB classifier
       // (q_nb_quality) against its own training labels: tie-averaged
@@ -841,7 +841,7 @@ private[graft] object QCorpus {
         |SELECT ld.doc_id,
         |  round((pr.prior9 + COALESCE(slo.slo9, 0)) / 1e9, 6) AS nb_logit
         |FROM ld CROSS JOIN pr LEFT JOIN slo ON slo.doc_id = ld.doc_id
-        |ORDER BY ld.doc_id""".stripMargin)),
+        |ORDER BY ld.doc_id""".stripMargin), singlePass = true),
 
     Q("q_nb_platt",  // Platt-scaled NB probabilities + reliability
       // bins (VERDICT r14 #7): the trained classifier's logit becomes
@@ -878,7 +878,7 @@ private[graft] object QCorpus {
             round(lit(a), 6).as("platt_a"), round(lit(b), 6).as("platt_b"))
           .orderBy("bin")
       },
-      Some(plattOracleSql(8)), iterative = true),
+      Some(plattOracleSql(8))),
 
     Q("q_zorder_value",  // the Morton key under the r15 Z-ordered
       // layout write (Sinks.zOrderValue/zOrderLayout), value-oracled:

@@ -46,7 +46,7 @@ private[graft] object QCuration {
         |drops AS (SELECT DISTINCT id2 FROM p
         |          WHERE CAST(inter AS DOUBLE) / (s1 + s2 - inter) >= 0.5)
         |SELECT doc_id FROM ex WHERE doc_id NOT IN (SELECT id2 FROM drops)
-        |ORDER BY doc_id""".stripMargin)),
+        |ORDER BY doc_id""".stripMargin), singlePass = true),
 
     Q("q_curation_v3",  // composed funnel of this round's new operators,
       // value-oracled END-TO-END: normalize → exact-dedup on the
@@ -110,7 +110,7 @@ private[graft] object QCuration {
         |sc AS (SELECT doc_id, -avg(logp) AS xent
         |       FROM bg JOIN pp USING (w1, w2) GROUP BY 1)
         |SELECT sc.doc_id, t.source, round(sc.xent, 6) AS xent
-        |FROM sc JOIN t USING (doc_id) ORDER BY doc_id""".stripMargin)),
+        |FROM sc JOIN t USING (doc_id) ORDER BY doc_id""".stripMargin), singlePass = true),
 
     Q("q_curation_v4",  // composed funnel of THIS round's operators,
       // value-oracled END-TO-END: URL canonicalization → per-(domain,
@@ -269,7 +269,7 @@ private[graft] object QCuration {
         |sc AS (SELECT doc_id, -avg(logp) AS x
         |       FROM bg JOIN ppn USING (w1, w2) GROUP BY 1)
         |SELECT sc.doc_id, t2.domain, round(sc.x, 6) AS xent_kn
-        |FROM sc JOIN t2 USING (doc_id) ORDER BY doc_id""".stripMargin)),
+        |FROM sc JOIN t2 USING (doc_id) ORDER BY doc_id""".stripMargin), singlePass = true),
 
     Q("q_datasheet",  // per-source corpus datasheet ("Datasheets for
       // Datasets", Gebru et al. CACM 2021): doc/char/token volumes,
@@ -332,7 +332,7 @@ private[graft] object QCuration {
         |          FROM d JOIN n na ON na.vec_id = id1 JOIN n nb ON nb.vec_id = id2
         |          WHERE dp / (na.nrm * nb.nrm) >= 0.4)
         |SELECT doc_id FROM q WHERE doc_id NOT IN (SELECT id2 FROM drops)
-        |ORDER BY doc_id""".stripMargin)),
+        |ORDER BY doc_id""".stripMargin), singlePass = true),
 
     Q("q_csv_roundtrip",  // line-format sink/source: csv write + schema-full
       (s, dir) => {        // read-back must be the identity
@@ -429,7 +429,7 @@ private[graft] object QCuration {
       Some("""SELECT l_returnflag, count(*) AS n, sum(l_quantity) AS sum_qty,
         |true AS pruned
         |FROM lineitem WHERE l_orderkey BETWEEN 1 AND 300
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin), singlePass = true),
 
     Q("q_snapshot_changes",  // incremental change capture on a snapshot
       // table: seed with the even-length documents, appendSnapshot the
@@ -540,8 +540,7 @@ private[graft] object QCuration {
           .orderBy("lang")
       },
       Some("""SELECT lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS chars
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
-      iterative = true),
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
 
     Q("q_corpus_stats",  // dataset-card profile per source shard
       (s, dir) => {

@@ -71,7 +71,7 @@ private[graft] object QDedup1 {
         |SELECT id1, id2,
         |       round(CAST(inter AS DOUBLE) / (s1 + s2 - inter), 6) AS jaccard
         |FROM p WHERE CAST(inter AS DOUBLE) / (s1 + s2 - inter) >= 0.9
-        |ORDER BY id1, id2""".stripMargin)),
+        |ORDER BY id1, id2""".stripMargin), singlePass = true),
 
     Q("q_ngram3_jaccard",  // exact word-3-shingle Jaccard ≥ 0.5, unblocked.
       // SMALL-DATA ORACLE WITNESS, deliberately the direct self-join: on
@@ -99,7 +99,7 @@ private[graft] object QDedup1 {
         |SELECT id1, id2,
         |       round(CAST(inter AS DOUBLE) / (s1 + s2 - inter), 6) AS jaccard
         |FROM p WHERE CAST(inter AS DOUBLE) / (s1 + s2 - inter) >= 0.5
-        |ORDER BY id1, id2""".stripMargin)),
+        |ORDER BY id1, id2""".stripMargin), singlePass = true),
 
     Q("q_ngram3_jaccard_capped",  // the 3-shingle Jaccard SCALE form: group
       // ids per shingle bucket, cap pathological buckets at maxBucket
@@ -128,7 +128,7 @@ private[graft] object QDedup1 {
         |SELECT id1, id2,
         |       round(CAST(inter AS DOUBLE) / (s1 + s2 - inter), 6) AS jaccard
         |FROM p WHERE CAST(inter AS DOUBLE) / (s1 + s2 - inter) >= 0.5
-        |ORDER BY id1, id2""".stripMargin)),
+        |ORDER BY id1, id2""".stripMargin), singlePass = true),
 
     Q("q_cross_dedup",  // cross-corpus near-dup retrieval (R-S Jaccard
       // join): corpus docs with 3-shingle Jaccard ≥ 0.5 against ANY doc
@@ -202,7 +202,7 @@ private[graft] object QDedup1 {
         |         FROM band a JOIN band b
         |           ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id)
         |SELECT id1, id2 FROM cand ORDER BY id1, id2""".stripMargin
-      }),
+      }, singlePass = true),
 
     Q("q_minhash_err",  // MinHash ESTIMATOR CALIBRATION — the grade on
       // the sketch itself, next to the pipeline witnesses: for every
@@ -542,7 +542,7 @@ private[graft] object QDedup1 {
         |      GROUP BY 1, 2, 3)
         |SELECT id1, id2, jw, est, round(abs(est - jw), 6) AS err
         |FROM pe ORDER BY id1, id2""".stripMargin
-      }),
+      }, singlePass = true),
 
     Q("q_cws_err",  // REAL-valued weighted MinHash (Ioffe's Consistent
       // Weighted Sampling, ICDM 2010) calibrated against the exact
@@ -710,7 +710,7 @@ private[graft] object QDedup1 {
         |       UNION
         |       SELECT rr.id, ed.b AS reach FROM rr JOIN ed ON ed.a = rr.reach)
         |SELECT id, min(reach) AS rep FROM rr GROUP BY id ORDER BY id""".stripMargin
-      }),
+      }, singlePass = true),
 
     Q("q_decontaminate",  // benchmark decontamination: corpus docs sharing
       // any 5-gram with the doc_id%7 "eval set", + distinct-overlap counts;
@@ -787,7 +787,7 @@ private[graft] object QDedup1 {
         |        LEFT JOIN bpos b ON c.pos = b.pos
         |        GROUP BY c.doc_id, c.g HAVING count(b.pos) = 3)
         |SELECT doc_id, count(*) AS n_hits FROM hit
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin), singlePass = true),
 
     Q("q_shuffle_det",  // deterministic training-order shuffle: keyed-hash
       // permutation of the whole corpus, dense 1..N positions, epoch = salt;
@@ -945,7 +945,7 @@ private[graft] object QDedup1 {
         |      FROM m)
         |SELECT doc_id, CAST(min(s) AS INT) AS start,
         |       CAST(max(s) - min(s) + 5 AS INT) AS len
-        |FROM i GROUP BY doc_id, isl ORDER BY doc_id, start""".stripMargin)),
+        |FROM i GROUP BY doc_id, isl ORDER BY doc_id, start""".stripMargin), singlePass = true),
 
     Q("q_substring_dups",  // CROSS-document long-substring dedup (Lee et
       // al. arXiv:2107.06499, VERDICT r10 missing #2): maximal token
@@ -974,7 +974,7 @@ private[graft] object QDedup1 {
         |SELECT doc_id, CAST(min(s) AS INT) AS start,
         |       CAST(max(s) - min(s) + 8 AS INT) AS len,
         |       CAST(min(nd) AS BIGINT) AS ndocs
-        |FROM r GROUP BY doc_id, grp ORDER BY doc_id, start""".stripMargin)),
+        |FROM r GROUP BY doc_id, grp ORDER BY doc_id, start""".stripMargin), singlePass = true),
 
     Q("q_line_dedup",  // RefinedWeb/MassiveText line-level dedup (Penedo et
       // al. arXiv:2306.01116): lines occurring verbatim in ≥2 distinct
@@ -1157,7 +1157,7 @@ private[graft] object QDedup1 {
         |  round(-(CAST(sum(logp9) AS DOUBLE) / 1e9)
         |    / CAST(count(*) AS DOUBLE), 6) AS xent
         |FROM e JOIN m USING (w)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin), singlePass = true),
 
     Q("q_allpairs_tfidf",  // exact tf-idf weighted-cosine ALL-PAIRS over
       // the corpus — the inverted-index APSS plan (Bayardo et al.
@@ -1218,7 +1218,7 @@ private[graft] object QDedup1 {
       (s, dir) => {
         // distinct grams as ROWS, not arrays: explode + hash + row-level
         // distinct is 4-5× faster here than array_distinct over an
-        // unmaterialized transform (measured in MicroBench), and grams
+        // unmaterialized transform (measured at sf0.1), and grams
         // join as 8-byte longs (xxhash64 collisions ~1e-11 at this
         // cardinality — the distinct-count contract is unchanged, the
         // q_ngram3 device). repartition first: the gate parquet is one
@@ -1368,7 +1368,7 @@ private[graft] object QDedup1 {
         |      FROM p WHERE CAST(inter AS DOUBLE) / (s1 + s2 - inter) >= 0.05)
         |SELECT CAST(least(floor(j * 10 + 1e-9), 9) AS INT) AS bucket,
         |       count(*) AS n_pairs
-        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin)),
+        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin), singlePass = true),
 
     Q("q_stream_dedup",  // second ORACLED streaming row, this one
       // STATEFUL: exact dedup as dropDuplicates on the content hash
@@ -1469,7 +1469,7 @@ private[graft] object QDedup1 {
         |bg AS (SELECT DISTINCT unnest(g5) AS g FROM g WHERE doc_id % 7 = 0)
         |SELECT DISTINCT doc_id FROM
         |  (SELECT doc_id, unnest(g5) AS g FROM g WHERE doc_id % 7 <> 0)
-        |JOIN bg USING (g) ORDER BY doc_id""".stripMargin)),
+        |JOIN bg USING (g) ORDER BY doc_id""".stripMargin), singlePass = true),
 
     Q("q_stream_wverify",  // ORACLED streaming row completing the
       // weighted-dedup family (VERDICT r13 #7): WEIGHTED near-dup
@@ -1572,7 +1572,7 @@ private[graft] object QDedup1 {
         |        round(sum(least(wa, wb)) / sum(greatest(wa, wb)), 6) AS jw
         |      FROM g GROUP BY 1, 2)
         |SELECT id1, id2, jw FROM j WHERE jw >= 0.1
-        |ORDER BY id1, id2""".stripMargin)),
+        |ORDER BY id1, id2""".stripMargin), singlePass = true),
 
     Q("q_stream_window",  // third ORACLED streaming row — WATERMARKED,
       // WINDOWED, APPEND: hourly event-type counts with a 2 h watermark
@@ -1617,6 +1617,6 @@ private[graft] object QDedup1 {
         |  event_type, count(*) AS n, round(sum(value), 2) AS total
         |FROM events, wm
         |WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR <= wm.w
-        |GROUP BY 1, 2 ORDER BY hour_epoch, event_type""".stripMargin))
+        |GROUP BY 1, 2 ORDER BY hour_epoch, event_type""".stripMargin), singlePass = true)
   )
 }

@@ -48,7 +48,7 @@ private[graft] object QDedup2 {
         |SELECT id1, id2,
         |       round(CAST(inter AS DOUBLE) / least(s1, s2), 6) AS containment
         |FROM p WHERE CAST(inter AS DOUBLE) / least(s1, s2) >= 0.8
-        |ORDER BY id1, id2""".stripMargin)),
+        |ORDER BY id1, id2""".stripMargin), singlePass = true),
 
     Q("q_cms_counts",  // Count-Min sketch (Cormode & Muthukrishnan 2003)
       // term-frequency estimation, VALUE-ORACLED: buckets are md5-derived
@@ -392,7 +392,7 @@ private[graft] object QDedup2 {
         |  CAST(end_ms // 1000 AS BIGINT) AS end_s, n_events
         |FROM ses JOIN mx USING (user_id) CROSS JOIN wm
         |WHERE ses.s < mx.last_s OR ses.end_ms + 1800000 < wm.w
-        |ORDER BY user_id, start_s""".stripMargin)),
+        |ORDER BY user_id, start_s""".stripMargin), singlePass = true),
 
     Q("q_stream_join",  // fifth ORACLED streaming row — STREAM-STREAM
       // interval join with double-sided watermarks: signup events joined
@@ -442,7 +442,7 @@ private[graft] object QDedup2 {
         |JOIN (SELECT * FROM events WHERE event_type = 'signup') s
         |  ON s.user_id = e.user_id
         |  AND epoch_ns(e.ts) - epoch_ns(s.ts) BETWEEN 0 AND 3600000000000
-        |ORDER BY error_id, signup_id""".stripMargin)),
+        |ORDER BY error_id, signup_id""".stripMargin), singlePass = true),
 
     Q("q_bm25",  // Okapi BM25 retrieval scoring (Robertson & Walker,
       // SIGIR'94; k1=1.2, b=0.75) for a fixed 3-term query — the
@@ -796,7 +796,7 @@ private[graft] object QDedup2 {
         |  CAST(tok_offset // 128 AS BIGINT) AS seq_first,
         |  CAST(CASE WHEN n_toks = 0 THEN tok_offset // 128
         |       ELSE (tok_offset + n_toks - 1) // 128 END AS BIGINT) AS seq_last
-        |FROM o ORDER BY doc_id""".stripMargin)),
+        |FROM o ORDER BY doc_id""".stripMargin), singlePass = true),
 
     Q("q_top_per_source",  // per-domain cap: the 10 best-quality docs per
       // source (window partitioned BY SOURCE — many bounded partitions,
@@ -992,7 +992,7 @@ private[graft] object QDedup2 {
           numHashes = 128, seed = 42L)
         Dedup.lshCandidates(sigs, bands = 32).orderBy("id1", "id2")
       },
-      None),
+      None, singlePass = true),
 
     Q("q_char_minhash_pairs",  // char-5-gram MinHash, fully fused: rolling-hash
       (s, dir) => {               // Expression → MinHashSigs Expression → LSH.
@@ -1021,7 +1021,7 @@ private[graft] object QDedup2 {
                 lower(col("text")), 5), numHashes = 128, seed = 42L).as("sig"))
         Dedup.lshCandidates(sigs, bands = 32).orderBy("id1", "id2")
       },
-      None),
+      None, singlePass = true),
 
     Q("q_char_minhash_md5",  // char-5-gram MinHash+LSH, value-level oracled:
       // the q_minhash_lsh_md5 portable-SQL trick (md5 base hash, decimal
@@ -1064,7 +1064,7 @@ private[graft] object QDedup2 {
         |         FROM band a JOIN band b
         |           ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id)
         |SELECT id1, id2 FROM cand ORDER BY id1, id2""".stripMargin
-      }),
+      }, singlePass = true),
 
     Q("q_simhash_pairs",  // SimHash near-dups (Hamming ≤ 3) — rows-only
       // (engine xxhash64 base hash); the value-level oracle for the same

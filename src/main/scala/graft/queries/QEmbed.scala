@@ -65,7 +65,7 @@ private[graft] object QEmbed {
         |           0.75 * n1f / c1 * (n1b / CAST(nbt AS DOUBLE))) AS logp
         |      FROM bc JOIN cc USING (w1) JOIN ct USING (w2) CROSS JOIN nt)
         |SELECT doc_id, round(-avg(logp), 6) AS xent_kn
-        |FROM b JOIN p USING (w1, w2) GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+        |FROM b JOIN p USING (w1, w2) GROUP BY doc_id ORDER BY doc_id""".stripMargin), singlePass = true),
 
     Q("q_hashing_tf",  // feature hashing (Weinberger et al. ICML'09 /
       // MLlib HashingTF): term counts bucketed by md5 into a fixed
@@ -142,7 +142,7 @@ private[graft] object QEmbed {
         |        row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nbr) AS rnk
         |      FROM c2)
         |SELECT qid, CAST(rnk AS INT) AS rank, nbr, cos
-        |FROM r WHERE rnk <= 5 ORDER BY qid, rank""".stripMargin)),
+        |FROM r WHERE rnk <= 5 ORDER BY qid, rank""".stripMargin), singlePass = true),
 
     Q("q_knn_approx_recall",  // per-vector |approx top-5 ∩ exact top-5|
       // — the recall grade of q_knn_approx against q_knn_graph, on the
@@ -277,7 +277,7 @@ private[graft] object QEmbed {
         |        row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nbr) AS rnk
         |      FROM c2)
         |SELECT qid, qlab, CAST(rnk AS INT) AS rank, nbr, nlab, cos
-        |FROM r WHERE rnk <= 5 ORDER BY qid, rank""".stripMargin)),
+        |FROM r WHERE rnk <= 5 ORDER BY qid, rank""".stripMargin), singlePass = true),
 
     Q("q_sign_bits",  // binary (1-bit/dim) sign quantization — the
       // cheapest retrieval tier (d=64 → two 32-bit words; 128× at

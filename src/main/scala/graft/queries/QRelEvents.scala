@@ -49,7 +49,7 @@ private[graft] object QRelEvents {
         |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
         |  count(*) AS n
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin), singlePass = true),
 
     Q("q_skew_join_aqe",  // adaptive complement of q_salted_join: plain SMJ,
       (s, dir) => SkewOps.aqeSkewJoin(  // hot keys left to AQE's runtime split
@@ -286,7 +286,7 @@ private[graft] object QRelEvents {
         |  CAST(NULL AS DOUBLE) AS mean_num,
         |  min(l_returnflag) AS min_str, max(l_returnflag) AS max_str
         |FROM lineitem
-        |ORDER BY col_name""".stripMargin)),
+        |ORDER BY col_name""".stripMargin), singlePass = true),
 
     // ---- event-sequence operators: sessionize, as-of join, range join, pivot
     Q("q_sessionize",  // 30-min-gap sessions per user

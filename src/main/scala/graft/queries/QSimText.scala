@@ -117,7 +117,7 @@ private[graft] object QSimText {
         |c AS (SELECT id1, id2, dp / (na.nrm * nb.nrm) AS cos
         |      FROM d JOIN n na ON na.vec_id = id1 JOIN n nb ON nb.vec_id = id2)
         |SELECT id1, id2, round(cos, 6) AS cos FROM c
-        |WHERE cos >= 0.9 ORDER BY id1, id2""".stripMargin)),
+        |WHERE cos >= 0.9 ORDER BY id1, id2""".stripMargin), singlePass = true),
 
     Q("q_ann_ivf",  // IVF ANN top-5 with a deterministic routing table (the
       (s, dir) => {  // vec_id<8 centroids) — the full IVF mechanics, oracled
@@ -204,7 +204,7 @@ private[graft] object QSimText {
         |rr AS (SELECT id, id AS reach FROM nn
         |       UNION
         |       SELECT rr.id, ed.b AS reach FROM rr JOIN ed ON ed.a = rr.reach)
-        |SELECT id, min(reach) AS rep FROM rr GROUP BY id ORDER BY id""".stripMargin)),
+        |SELECT id, min(reach) AS rep FROM rr GROUP BY id ORDER BY id""".stripMargin), singlePass = true),
 
     // ---- M8: text analysis + multimodal plumbing (beyond-reference)
     Q("q_lang_id",
@@ -667,7 +667,7 @@ private[graft] object QSimText {
         |  round((doc_id % 200) + (doc_id % 13) / 2.0, 6) AS mean_r,
         |  round((doc_id * 7 % 200) + (doc_id % 11) / 2.0, 6) AS mean_g,
         |  round(CAST(doc_id * 13 % 200 AS DOUBLE), 6) AS mean_b
-        |FROM documents ORDER BY media_id""".stripMargin)),
+        |FROM documents ORDER BY media_id""".stripMargin), singlePass = true),
 
     Q("q_image_phash",  // perceptual image hash over REAL ImageIO-decoded
       // pixels, resampled to a FIXED 8×8 grid first (VERDICT r10 #3 —
@@ -727,7 +727,7 @@ private[graft] object QSimText {
         |         WHERE cnt >= 2 AND gid NOT IN (SELECT gid FROM ccm)),
         |lab AS (SELECT gid, rep FROM ccm UNION ALL SELECT gid, rep FROM solo)
         |SELECT hs.id, lab.rep FROM hs JOIN grp USING (ahash)
-        |JOIN lab USING (gid) ORDER BY id""".stripMargin)),
+        |JOIN lab USING (gid) ORDER BY id""".stripMargin), singlePass = true),
 
     Q("q_audio_features",  // REAL javax.sound decode of synthetic WAVs —
       // alternating ±A 16-bit PCM gives n_samples and RMS closed forms
@@ -919,7 +919,7 @@ private[graft] object QSimText {
           .select(col("doc_id"), col("boot"), col("lang_pred"), col("logit"))
           .orderBy("doc_id")
       },
-      Some(LangClfOracleSql), iterative = true),
+      Some(LangClfOracleSql)),
 
     Q("q_unigram_learn",  // unigram-LM (SentencePiece) tokenizer
       // TRAINING (Kudo 2018; VERDICT r16 next #3): seed vocabulary
@@ -937,7 +937,7 @@ private[graft] object QSimText {
         Unigram.wordFreqs(Tables.table(s, dir, "documents"), "text"),
         rounds = 2, maxMulti = 90)
         .orderBy("piece"),
-      Some(unigramOracleSql(rounds = 2, finalEncode = false)), iterative = true),
+      Some(unigramOracleSql(rounds = 2, finalEncode = false))),
 
     Q("q_unigram_encode",  // the SERVING path: Viterbi encode of every
       // distinct word under the trained unigram LM — piece sequence,
@@ -956,7 +956,7 @@ private[graft] object QSimText {
             col("score9"))
           .orderBy("word")
       },
-      Some(unigramOracleSql(rounds = 2, finalEncode = true)), iterative = true)
+      Some(unigramOracleSql(rounds = 2, finalEncode = true)))
   )
 
   /** GENERATED DuckDB oracle for the unigram-LM family: rebuilds the

@@ -430,7 +430,7 @@ private[graft] object QTail {
         |       FROM g JOIN r2 ON r2.id = g.src JOIN od ON od.id = g.src GROUP BY 1),
         |r3 AS (SELECT nodes.id, (1.0 - 0.85) / nn.n + 0.85 * COALESCE(c3.c, 0.0) AS r
         |       FROM nodes CROSS JOIN nn LEFT JOIN c3 ON c3.id = nodes.id)
-        |SELECT id, round(r, 12) AS rank FROM r3 ORDER BY id""".stripMargin)),
+        |SELECT id, round(r, 12) AS rank FROM r3 ORDER BY id""".stripMargin), singlePass = true),
 
     Q("q_label_prop",  // fixed-iteration label propagation (Zhu &
       // Ghahramani 2002) over the cell-routed APPROXIMATE cosine 5-NN
@@ -471,7 +471,7 @@ private[graft] object QTail {
         |l2 AS (SELECT l1.id, COALESCE(l1.label, b2.nl) AS label
         |       FROM l1 LEFT JOIN b2 USING (id))
         |SELECT id, CAST(COALESCE(label, -1) AS INT) AS label
-        |FROM l2 ORDER BY id""".stripMargin)),
+        |FROM l2 ORDER BY id""".stripMargin), singlePass = true),
 
     Q("q_hits",  // fixed-iteration HITS hubs & authorities (Kleinberg
       // JACM 1999) over the same cell-routed approximate 5-NN graph as
@@ -528,7 +528,7 @@ private[graft] object QTail {
         |        ELSE round(raw / h2s.s, 9) END + 0.0 AS hub
         |      FROM h2f CROSS JOIN h2s)
         |SELECT a2.id, a2.auth, h2.hub
-        |FROM a2 JOIN h2 USING (id) ORDER BY id""".stripMargin)),
+        |FROM a2 JOIN h2 USING (id) ORDER BY id""".stripMargin), singlePass = true),
 
     Q("q_textrank",  // TextRank keyword scoring (Mihalcea & Tarau,
       // EMNLP 2004 §3.1): PageRank over the undirected word adjacency
@@ -564,7 +564,7 @@ private[graft] object QTail {
         |r3 AS (SELECT nodes.id, (1.0 - 0.85) / nn.n + 0.85 * COALESCE(c3.c, 0.0) AS r
         |       FROM nodes CROSS JOIN nn LEFT JOIN c3 ON c3.id = nodes.id)
         |SELECT id AS word, round(r, 12) AS rank
-        |FROM r3 ORDER BY word""".stripMargin)),
+        |FROM r3 ORDER BY word""".stripMargin), singlePass = true),
 
     Q("q_length_winsor",  // per-source length winsorization screen:
       // docs outside their source's exact interpolated [p05, p95]

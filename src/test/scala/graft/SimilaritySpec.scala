@@ -24,6 +24,17 @@ class SimilaritySpec extends AnyFunSuite {
     assert(df(3L) == 0.0)
   }
 
+  test("knn_block_topk rejects array<float> block vectors at analysis time") {
+    val floatBlocks = spark.range(1).select(
+      array(struct(lit(1L).as("id"), array(lit(1.0f), lit(0.0f)).as("u"))).as("b"))
+    // select() analyses eagerly; no action runs, so no job can start
+    val err = intercept[org.apache.spark.sql.AnalysisException] {
+      floatBlocks.select(graft.functions.BlockPairKernels.knn_block_topk(
+        $"b", $"b", lit(true), 2, 6))
+    }
+    assert(err.getMessage.contains("knn_block_topk expects"))
+  }
+
   test("knnSelfJoin: nprobe=C degenerates to the exact knnGraph; partial nprobe is a ranked subset") {
     val cells = emb
       .select($"vec_id".cast("long"),

@@ -3,11 +3,13 @@
 
 Usage: tools/bench_median.py out/bench_r6_a.json [more.json ...] > out/bench_r6.json
 
-Per-query warm/cold = median across runs (NaN-sentinel -1 samples and
-budget-degraded single-pass samples are excluded per query when a
-clean sample exists); totals are the sums of those medians. This is the
-methodology the round-5 record used — single runs on this host are a
-stall lottery (see README bench note).
+Each run's per-entry `modes` field decides where a sample goes: "warm"
+and "substrate" samples (what Bench's `value` sums) into `queries`,
+"single" samples — one cold pass — into `queries_single`, so cold
+samples are never mixed into warm medians. `queries_cold` holds every
+entry's cold-pass median. NaN-sentinel -1 samples are excluded (an
+entry with none left records -1); totals are the sums of the medians.
+Single runs on this host are a stall lottery (see README bench note).
 
 SHA consistency (VERDICT r12 #7): every pass stamps the git SHA of the
 tree it measured ("sha" field, "<sha>-dirty" when uncommitted changes
@@ -45,29 +47,30 @@ def main(paths):
                  "to override):\n  " + "\n  ".join(problems))
     names = sorted({q for r in runs for q in r["queries"]})
 
-    def med(key, name):
-        clean, degraded = [], []
-        for r in runs:
-            v = r[key].get(name, -1)
-            if v < 0:
-                continue
-            (degraded if name in set(r.get("single_pass", [])) else clean).append(v)
-        pool = clean or degraded
-        return statistics.median(pool) if pool else -1
+    def medians(key, modes):
+        out = {}
+        for n in names:
+            vals = [r[key][n] for r in runs if r["modes"].get(n) in modes]
+            if vals:
+                clean = [v for v in vals if v >= 0]
+                out[n] = statistics.median(clean) if clean else -1
+        return out
 
-    warm = {n: med("queries", n) for n in names}
-    cold = {n: med("queries_cold", n) for n in names}
+    warm = medians("queries", {"warm", "substrate"})
+    single = medians("queries", {"single"})
+    cold = medians("queries_cold", {"warm", "substrate", "single"})
     out = {
         "metric": "total",
         "value": sum(v for v in warm.values() if v >= 0),
         "unit": "sec",
         "cold_total": sum(v for v in cold.values() if v >= 0),
         "n_queries": len(names),
-        "method": "per-query median of %d runs (%s); -1/single-pass samples "
-                  "excluded when a clean sample exists" % (len(runs), ",".join(paths)),
+        "method": "per-entry median of %d runs (%s) by pass mode; -1 samples "
+                  "excluded" % (len(runs), ",".join(paths)),
         "sha": sorted(set(shas.values()))[0] if len(set(shas.values())) == 1
                else "MIXED:" + ",".join(sorted(set(shas.values()))),
         "queries": warm,
+        "queries_single": single,
         "queries_cold": cold,
         "sf": runs[0].get("sf", ""),
     }
